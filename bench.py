@@ -47,32 +47,38 @@ from ska_src_maltopuft_etl_spark.engine import get_spark, release_all_persisted
 from ska_src_maltopuft_etl_spark.plans import QUERIES
 
 
-def _executor_task_ms(spark) -> int | None:
-    """Cumulative executor task time (ms) across the app so far.
+def _stage_run_ms(spark, since: int) -> tuple[int, int] | None:
+    """``(newest stage id, executor run time in ms)`` of the stages newer
+    than stage id ``since``.
 
-    Round-15 scaling contract (VERDICT r14 #2): the per-query WALL time
-    at sf0.1 is driver-dominated, so the driver's low-vs-high-core wall
-    ratio reads ~1 everywhere and cannot tell a serial operator from a
-    driver-bound tier. Executor aggregate task time is the number that
-    scales with cores: per-query deltas of this counter let the scaling
-    probe separate "executor compute (parallelizable)" from "driver
-    overhead (core-count-invariant)". Read from the app status store's
-    executor summaries (sum of ``totalDuration``); the listener bus is
-    drained first so late task-end events land on the query that ran
+    The run time is the sum of stage ``executorRunTime``, i.e. task time
+    summed over tasks: it reads about cores x wall on a parallel query
+    and about wall on a driver-bound one, which is what separates
+    executor compute from driver overhead. (``ExecutorSummary.
+    totalDuration`` does not: it grows with wall time.) Read from the
+    app status store's stage list, newest first, after draining the
+    listener bus so late task-end events land on the query that ran
     them. Returns None if the internal API is unavailable (the field is
     additive — wall timings are unaffected).
     """
     try:
-        jsc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+        sc = spark.sparkContext
+        jsc = sc._jsc.sc()  # noqa: SLF001
         try:
             jsc.listenerBus().waitUntilEmpty()
         except Exception:
             pass  # best-effort drain; ~ms-level attribution slack is fine
-        total = 0
-        it = jsc.statusStore().executorList(False).iterator()
-        while it.hasNext():
-            total += it.next().totalDuration()
-        return int(total)
+        stages = jsc.statusStore().stageList(
+            None, False, False, sc._gateway.new_array(sc._jvm.double, 0), None  # noqa: SLF001
+        )
+        newest, total = since, 0
+        for i in range(stages.size()):
+            stage = stages.apply(i)
+            if stage.stageId() <= since:
+                break
+            newest = max(newest, stage.stageId())
+            total += stage.executorRunTime()
+        return newest, int(total)
     except Exception:
         return None
 
@@ -180,6 +186,7 @@ def main() -> None:
     # field (VERDICT r14 #2): recorded for the same round the best wall
     # time came from, so wall and task time describe one execution.
     task_sec: dict[str, float] = {}
+    since = -1
     for name, spec in specs.items():
         # progress marker on stderr (stdout stays machine-parseable;
         # the driver keeps only the final stdout line): long scaled-tier
@@ -188,15 +195,20 @@ def main() -> None:
         print(f"[bench] {name}", file=sys.stderr, flush=True)
         best_noop = None
         for _ in range(rounds):
-            tk0 = _executor_task_ms(spark)
+            mark = _stage_run_ms(spark, since)
             t0 = time.time()
             df = spec.fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             elapsed = time.time() - t0
-            tk1 = _executor_task_ms(spark)
+            run = _stage_run_ms(spark, mark[0]) if mark else None
+            if run:
+                since = run[0]
             if best_noop is None or elapsed < best_noop:
-                if tk0 is not None and tk1 is not None:
-                    task_sec[name] = round((tk1 - tk0) / 1000.0, 3)
+                # no stale round's task time next to this round's wall
+                if run is None:
+                    task_sec.pop(name, None)
+                else:
+                    task_sec[name] = round(run[1] / 1000.0, 3)
             best_noop = elapsed if best_noop is None else min(best_noop, elapsed)
             # queries are independent; drop any intermediates a query
             # pinned so later timings aren't distorted by cache/GC

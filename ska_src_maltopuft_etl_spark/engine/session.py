@@ -114,9 +114,8 @@ def release_all_persisted(spark: SparkSession) -> int:
     """Unpersist EVERY pinned RDD in the session — ``localCheckpoint``
     storage AND caller-created ``.cache()``/``.persist()`` caches alike.
 
-    The iterative operators (connected components, pagerank, scalable
-    surrogate keys) cut lineage with ``localCheckpoint``, which pins
-    blocks in executor storage for the session's lifetime —
+    The iterative operators (connected components, pagerank) cut
+    lineage with ``localCheckpoint``, which pins blocks in executor storage for the session's lifetime —
     ``spark.catalog.clearCache()`` does NOT release them (it only covers
     catalog-cached plans). In long-lived sessions running many such
     queries the accumulated blocks degrade everything through GC
@@ -138,8 +137,3 @@ def release_all_persisted(spark: SparkSession) -> int:
     for rdd in rdds:
         rdd.unpersist()
     return len(rdds)
-
-
-#: Deprecated alias — the old name implied only checkpoint storage was
-#: released, which invited misuse between stages of a live pipeline.
-release_checkpoints = release_all_persisted

@@ -14,8 +14,6 @@ from ska_src_maltopuft_etl_spark.operators.joins import (
 from ska_src_maltopuft_etl_spark.operators.dedup import (
     dedup_keep_first,
     surrogate_key,
-    surrogate_key_dense_int,
-    surrogate_key_with_count,
 )
 from ska_src_maltopuft_etl_spark.operators.graph import (
     connected_components,
@@ -87,7 +85,5 @@ __all__ = [
     "pagerank_fixed_point",
     "remap_keys",
     "surrogate_key",
-    "surrogate_key_dense_int",
-    "surrogate_key_with_count",
     "validated_join",
 ]

@@ -14,18 +14,20 @@ Scale notes: keep-first dedup is a window row_number over the subset —
 one shuffle on the subset keys, map-side partial skipping via AQE.
 Surrogate keys over a *global* order are inherently sequential; at
 reference scale a single-partition window is fine, and
-``surrogate_key(..., scalable=True)`` switches to the partition-offset
-(zipWithIndex-style) technique: two narrow passes, no single-partition
-bottleneck, same contiguous 1-based numbering.
+``surrogate_key(..., scalable=True)`` numbers rows inside ordered
+buckets instead: bucket bounds sampled once as driver literals, a
+bucket-count prefix sum, and a ``row_number`` per bucket — no
+single-partition pass over the fact, nothing pinned, same contiguous
+1-based numbering.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def _order_cols(order_by: Sequence[Column | str]) -> list[Column]:
@@ -51,21 +53,80 @@ def dedup_keep_first(
     )
 
 
-def _local_pairs_df(spark, rows, c1: str, c2: str) -> DataFrame:
-    """Tiny driver-local (long, long) frame as a SQL VALUES LocalRelation.
+def _sort_spec(c: Column) -> tuple[Column, bool, bool]:
+    """``(key, descending, nulls_first)`` of one :func:`_order_cols`
+    entry. A column without a sort order sorts as Spark's default,
+    ascending with nulls first."""
+    # the sort direction is readable only from the column's JVM node
+    node = c._jc.node()  # noqa: SLF001
+    if node.getClass().getSimpleName() != "SortOrder":
+        return c, False, True
+    key = type(c)(SparkContext._jvm.org.apache.spark.sql.Column(node.child()))  # noqa: SLF001
+    return (
+        key,
+        node.sortDirection().getClass().getSimpleName().startswith("Descending"),
+        node.nullOrdering().getClass().getSimpleName().startswith("NullsFirst"),
+    )
 
-    A LocalTableScan's broadcast build collects rows driver-side with no
-    job, no scan task and no Python-worker round-trip — strictly cheaper
-    than parallelizing a Python RDD (even 1-slice, the r14 fix) whose
-    broadcast must run a task through the Python runner. Used for the
-    per-partition offset tables of the numbering operators below.
-    """
-    if not rows:
-        return spark.sql(
-            f"SELECT CAST(NULL AS BIGINT) AS {c1}, CAST(NULL AS BIGINT) AS {c2}"
-        ).where("false")
-    values = ",".join(f"({int(a)}L,{int(b)}L)" for a, b in rows)
-    return spark.sql(f"SELECT col1 AS {c1}, col2 AS {c2} FROM (VALUES {values})")
+
+def _sorted(key: Column, desc: bool, nulls_first: bool) -> Column:
+    nulls = "first" if nulls_first else "last"
+    return getattr(key, f"{'desc' if desc else 'asc'}_nulls_{nulls}")()
+
+
+def _sample_bounds(
+    df: DataFrame, specs: list[tuple[Column, bool, bool]], n_buckets: int
+) -> list[tuple]:
+    """At most ``n_buckets - 1`` ascending bound tuples of the order
+    keys, read off a sorted random sample of about 100 rows per bucket.
+    This is the only job and the only driver collect of the scalable
+    numbering."""
+    keys = [f"__k{i}" for i in range(len(specs))]
+    sample = (
+        df.select(*[k.alias(a) for (k, _, _), a in zip(specs, keys)])
+        .orderBy(F.rand(0))
+        .limit(100 * n_buckets)
+        .orderBy(*[_sorted(F.col(a), d, nf) for (_, d, nf), a in zip(specs, keys)])
+        .collect()
+    )
+    if not sample:
+        return []
+    bounds: list[tuple] = []
+    for i in range(1, n_buckets):
+        b = tuple(sample[i * len(sample) // n_buckets])
+        if not bounds or b != bounds[-1]:
+            bounds.append(b)
+    return bounds
+
+
+def _at_or_after(specs: list[tuple[Column, bool, bool]], bound: tuple) -> Column:
+    """The row sorts at or after the literal tuple ``bound``:
+    lexicographic, each key in its own direction and null order."""
+    out = F.lit(True)
+    for (k, desc, nulls_first), b in reversed(list(zip(specs, bound))):
+        if b is None:
+            after = k.isNotNull() if nulls_first else F.lit(False)
+        else:
+            beyond = k < F.lit(b) if desc else k > F.lit(b)
+            after = F.coalesce(beyond, F.lit(not nulls_first))
+        out = after | (k.eqNullSafe(F.lit(b)) & out)
+    return out
+
+
+def _bucket(specs: list[tuple[Column, bool, bool]], bounds: list[tuple]) -> Column:
+    """How many of the ascending ``bounds`` the row sorts at or after —
+    a pure function of the row, non-decreasing in the sort order, found
+    by binary search."""
+
+    def search(lo: int, hi: int) -> Column:
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(
+            _at_or_after(specs, bounds[mid]), search(mid + 1, hi)
+        ).otherwise(search(lo, mid))
+
+    return search(0, len(bounds))
 
 
 def surrogate_key(
@@ -74,189 +135,43 @@ def surrogate_key(
     order_by: Sequence[Column | str],
     offset: int = 1,
     scalable: bool = False,
-    storage_level: StorageLevel | None = None,
 ) -> DataFrame:
     """Add a contiguous ``offset``-based integer key following a
     deterministic global order (reference W5 ``with_row_index``).
 
     - default: ``row_number`` over a global window — exact parity, fine
-      at dimension-table scale (the reference's frames);
-    - ``scalable=True``: sort, then per-partition row numbers + exclusive
-      prefix-sum of partition counts (the classic zipWithIndex technique
-      done in the DataFrame API via ``monotonically_increasing_id``): no
-      single-partition window, suitable for billions of rows.
-    - ``storage_level``: storage for the scalable path's one-time
-      materialization of the sorted fact (``localCheckpoint`` pins the
-      FULL fact on executor storage until released). ``None`` uses
-      Spark's default (memory-and-disk); pass
-      ``StorageLevel.DISK_ONLY`` to trade latency for headroom when the
-      fact dwarfs executor memory. Ignored for the window path.
+      at dimension-table scale (the reference's frames), and the oracle
+      the scalable mode is tested against;
+    - ``scalable=True``: no single-partition pass over the fact.
+      Bucket bounds are read once from a sample of the order keys
+      (one small job) and inlined as literals, so each row's bucket is
+      a pure function of the row. Per-bucket counts go through a
+      prefix-sum window (bucket-count rows — the only single-partition
+      exchange) to offsets, broadcast back, and each row's key is its
+      bucket offset plus its ``row_number`` inside the bucket. Both
+      branches read the same buckets whatever the partitioning or
+      however often the plan is recomputed, so nothing is pinned and
+      the result stays lazy. ``order_by`` must be a total order for
+      repeatable ids, as in the default mode.
     """
     ordered = _order_cols(order_by)
     if not scalable:
         w = Window.orderBy(*ordered)
         return df.withColumn(name, (F.row_number().over(w) + offset - 1).cast("long"))
-    out, _n = surrogate_key_with_count(
-        df, name, order_by, offset=offset, storage_level=storage_level
-    )
-    return out
-
-
-def surrogate_key_with_count(
-    df: DataFrame,
-    name: str,
-    order_by: Sequence[Column | str],
-    offset: int = 1,
-    storage_level: StorageLevel | None = None,
-) -> tuple[DataFrame, int]:
-    """``surrogate_key(..., scalable=True)`` that also returns the total
-    row count. The scalable path collects per-partition sizes anyway
-    (the exclusive prefix sum), so the count is free — callers that
-    number a frame and then need its cardinality (e.g. to derive
-    downstream bucket widths, see :func:`surrogate_key_dense_int`) avoid
-    a separate count job over the fact.
-    """
-    ordered = _order_cols(order_by)
-    sorted_df = df.repartitionByRange(*ordered).sortWithinPartitions(*ordered)
-    # monotonically_increasing_id() encodes (partition id << 33) + a
-    # 0-based consecutive row counter within the partition, evaluated in
-    # the order rows stream out of the sort — i.e. it IS the
-    # (pid, local_rn) pair, computed with ZERO additional exchange. The
-    # previous formulation derived local_rn with a row_number window
-    # over spark_partition_id, which forced one more full hash-exchange
-    # + sort of the fact (Catalyst can't see that range partitions are
-    # already disjoint on __pid).
-    #
-    # repartitionByRange picks boundaries by SAMPLING, and this plan
-    # reads the partitioned data from two branches (the size aggregate
-    # and the final numbering). If Catalyst does not reuse the exchange,
-    # each branch re-samples different boundaries and the ids disagree —
-    # the __pid join then silently drops or misnumbers rows (observed at
-    # 150k+ rows). localCheckpoint materializes the partitioning ONCE
-    # (eagerly, on executor storage, lineage cut) so both branches see
-    # identical ids.
-    # Lazy: the sizes .collect() below is the first action and
-    # materializes the checkpoint — eager=True would run the identical
-    # computation in an extra prior job. Consistency is unchanged:
-    # both downstream branches read the same pinned RDD blocks.
-    local = sorted_df.withColumn(
-        "__mid", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=False, storageLevel=storage_level)
-    pid = F.shiftright("__mid", 33)
-    # Per-partition sizes: one tiny aggregate (a row per partition),
-    # collected to the driver for the exclusive prefix sum.
-    # repartitionByRange assigns ascending key ranges to ascending
-    # partition ids, so accumulating in pid order follows the global
-    # sort order. Collecting (vs a window over the aggregate) costs one
-    # extra tiny job against the checkpointed fact and buys a RUNTIME
-    # INVARIANT CHECK: the numbering relies on the per-partition counter
-    # inside monotonically_increasing_id being CONSECUTIVE from 0 — the
-    # documented contract only guarantees monotonic+unique. Verify
-    # max(local id) + 1 == count per partition and fail loudly if the
-    # bit layout ever changes, instead of silently mis-numbering ids
-    # that downstream FK keymaps then propagate.
-    sizes = (
-        local.groupBy(pid.alias("__pid"))
-        .agg(F.count(F.lit(1)).alias("__cnt"), F.max("__mid").alias("__maxmid"))
-        .collect()
-    )
-    running = 0
-    rows: list[tuple[int, int]] = []
-    for r in sorted(sizes, key=lambda r: r["__pid"]):
-        local_max = r["__maxmid"] - (r["__pid"] << 33)
-        if local_max + 1 != r["__cnt"]:
-            raise RuntimeError(
-                "surrogate_key(scalable=True): monotonically_increasing_id "
-                f"is no longer a consecutive per-partition counter (pid "
-                f"{r['__pid']}: max local id {local_max}, count "
-                f"{r['__cnt']}). Refusing to emit non-contiguous ids; use "
-                "scalable=False or restore the row_number fallback."
-            )
-        rows.append((r["__pid"], running))
-        running += r["__cnt"]
-    spark = df.sparkSession
-    # LocalRelation VALUES frame (not a parallelized Python RDD): the
-    # broadcast build collects it driver-side without a task or a
-    # Python-worker round-trip.
-    offsets = _local_pairs_df(spark, rows, "__pid", "__poffset")
-    out = (
-        local.withColumn("__pid", pid)
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            name,
-            (
-                (F.col("__mid") - F.shiftleft("__pid", 33))  # local 0-based rn
-                + F.col("__poffset")
-                + offset
-            ).cast("long"),
-        )
-        .drop("__pid", "__mid", "__poffset")
-    )
-    return out, running
-
-
-def surrogate_key_dense_int(
-    df: DataFrame,
-    name: str,
-    key_col: str,
-    key_max: int,
-    offset: int = 1,
-    num_buckets: int | None = None,
-) -> DataFrame:
-    """Contiguous ``offset``-based numbering of rows by an existing
-    UNIQUE integer key column with values in ``[1, key_max]`` (a
-    surrogate key assigned upstream — gaps from filtering/dedup are
-    fine; the output follows ascending ``key_col`` order).
-
-    The cheap second-pass twin of ``surrogate_key(scalable=True)``
-    (guide §2.4 — remove shuffles outright): when rows already carry a
-    bounded integer order key, the global sort order can be recovered
-    from equal-width ordered key-range buckets instead of a sampled
-    range partitioning, so this pass needs
-
-    - NO range-sampling job (bucket = ``(key-1) DIV w`` is a pure
-      function of the key),
-    - NO ``localCheckpoint`` of the fact (the two consumers — the
-      per-bucket counts and the final rank — are deterministic in the
-      key set, not in partitioning or sampling),
-    - NO driver-side action at all: the exclusive prefix sum runs as a
-      window over the per-bucket COUNTS (≤ ``num_buckets`` rows — the
-      only single-partition exchange, bucket-count-sized, never
-      fact-sized), so the whole pass stays lazy and plans into the
-      caller's next action instead of forcing the upstream pipeline at
-      build time, and
-    - ONE fact-sized hash exchange + in-partition sort (the rank
-      window), per-task state bounded by ``w = ceil(key_max /
-      num_buckets)`` rows.
-
-    The caller must ensure the key set is stable across recomputation
-    (our callers number a checkpointed/persisted frame). Used by the
-    MeerTRAP candidate pipeline to fuse its second scalable numbering
-    pass onto the first pass's key (VERDICT r14 #1).
-    """
-    import math
-
-    spark = df.sparkSession
-    n_b = num_buckets or spark.sparkContext.defaultParallelism
-    w = max(1, math.ceil(key_max / max(1, n_b)))
-    with_b = df.withColumn("__skb", F.expr(f"({key_col} - 1) DIV {w}"))
+    specs = [_sort_spec(c) for c in ordered]
+    n_buckets = df.sparkSession.sparkContext.defaultParallelism
+    with_b = df.withColumn("__skb", _bucket(specs, _sample_bounds(df, specs, n_buckets)))
     counts = with_b.groupBy("__skb").agg(F.count(F.lit(1)).alias("__cnt"))
-    offw = (
-        Window.orderBy("__skb")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    before = Window.orderBy("__skb").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(
-        "__skb",
-        F.coalesce(F.sum("__cnt").over(offw), F.lit(0)).alias("__skoff"),
+        "__skb", F.coalesce(F.sum("__cnt").over(before), F.lit(0)).alias("__skoff")
     )
-    win = Window.partitionBy("__skb").orderBy(F.col(key_col).asc())
+    win = Window.partitionBy("__skb").orderBy(*ordered)
     return (
         with_b.join(F.broadcast(offsets), "__skb")
         .withColumn(
             name,
-            (F.row_number().over(win) - 1 + F.col("__skoff") + offset).cast(
-                "long"
-            ),
+            (F.row_number().over(win) - 1 + F.col("__skoff") + offset).cast("long"),
         )
         .drop("__skb", "__skoff")
     )

@@ -6,25 +6,26 @@ there — fine at dimension scale, a guaranteed OOM when one group spans
 a meaningful fraction of a 100 TB fact. This module computes the same
 interpolated percentiles via the classic distributed sort-rank plan:
 
-1. range-partition + sort the (group, value) pairs (one full shuffle —
-   the same shuffle any total sort pays);
-2. global 0-based positions from per-partition offsets
+1. global 0-based positions in (group, value) order
    (:func:`~ska_src_maltopuft_etl_spark.operators.dedup.surrogate_key`
-   with ``scalable=True`` — no single-partition window anywhere);
-3. per-group start offsets and counts from ONE keyed aggregate (range
-   partitioning is group-major, so a group's rank is just
+   with ``scalable=True`` — rows are numbered inside sampled,
+   group-major order buckets; no single-partition window over the
+   values anywhere);
+2. per-group start offsets and counts from ONE keyed aggregate (the
+   numbering is group-major, so a group's rank is just
    ``global_pos - min(global_pos)``);
-4. the two bracketing ranks per (group, percentile) are an equi
+3. the two bracketing ranks per (group, percentile) are an equi
    broadcast-hash join of the fact against a tiny (2 x groups x probs)-row
    target table — map-side, codegen'd;
-5. linear interpolation with EXACTLY the built-in's operation order
+4. linear interpolation with EXACTLY the built-in's operation order
    (``(higher - pos) * v_lo + (pos - lower) * v_hi``, the special-cased
    ``higher == lower`` branch first), so results are bit-identical to
    ``F.percentile`` — property-tested in ``tests/test_quantiles.py``.
 
-Peak per-task memory is one sorted partition (spillable), never one
-group. The only driver-side state is the per-partition size list that
-``surrogate_key`` already collects (a row per partition, not per value).
+Peak per-task memory is one numbering bucket (spillable), never one
+group. The only driver-side state is the bounded sample of (group,
+value) pairs ``surrogate_key`` reads its bucket bounds from (about 100
+rows per core, not per value).
 
 Reference: the reference's pandas/Polars quantiles are single-node
 in-memory sorts (no counterpart file — this operator exists for the
@@ -37,7 +38,6 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ska_src_maltopuft_etl_spark.operators.dedup import surrogate_key
 
@@ -48,7 +48,6 @@ def exact_percentiles(
     probs: Sequence[float],
     by: Sequence[str] = (),
     out_col: str = "value",
-    storage_level: StorageLevel | None = None,
 ) -> DataFrame:
     """Exact interpolated percentiles, distributed.
 
@@ -62,7 +61,7 @@ def exact_percentiles(
 
     ``by`` may be empty for a global percentile. The per-group start
     offsets come from a keyed aggregate, so group cardinality is
-    unbounded; only partition COUNT drives the tiny driver-side state.
+    unbounded; only the core count sizes the tiny driver-side sample.
     NULL ``by`` keys form their own group (null-safe join below), same
     as ``groupBy`` + ``F.percentile``.
     """
@@ -78,13 +77,10 @@ def exact_percentiles(
     ).where(F.col(value_col).isNotNull())
 
     order = [F.col(c).asc() for c in by] + [F.col("__v").asc()]
-    ranked = surrogate_key(
-        vals, "__gpos", order_by=order, offset=0, scalable=True,
-        storage_level=storage_level,
-    )
+    ranked = surrogate_key(vals, "__gpos", order_by=order, offset=0, scalable=True)
 
-    # Group-major range partitioning => a group's local rank is its
-    # global position minus the group's first position. One keyed agg.
+    # Group-major numbering => a group's local rank is its global
+    # position minus the group's first position. One keyed agg.
     stats = ranked.groupBy(*by).agg(
         F.min("__gpos").alias("__gstart"),
         F.count(F.lit(1)).alias("__n"),

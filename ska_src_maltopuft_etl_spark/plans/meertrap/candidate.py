@@ -27,8 +27,7 @@ from ska_src_maltopuft_etl_spark import functions as K
 from ska_src_maltopuft_etl_spark.operators import (
     asof_join_backward,
     dedup_keep_first,
-    surrogate_key_dense_int,
-    surrogate_key_with_count,
+    surrogate_key,
 )
 from ska_src_maltopuft_etl_spark.plans.meertrap.observation import (
     UnexpectedShapeError,
@@ -55,18 +54,15 @@ class CandidateTables:
 
 def transform_candidate(
     cand_df: DataFrame, beam_obs: DataFrame, validate: bool = True
-) -> tuple[DataFrame, int]:
+) -> DataFrame:
     """Candidate rows with coordinates, observed_at, pos and beam_id
-    (candidate/transform.py:87-202). Returns ``(frame, n_candidates)``
-    — the numbering pass collects per-partition sizes anyway, so the
-    total comes free and seeds the second numbering pass's bucket width
-    (see :func:`transform_sp_candidate`)."""
+    (candidate/transform.py:87-202)."""
     # (cand_mjd, filename) is a total order over candidate rows, so the
-    # partition-offset mode produces ids identical to the global-window
-    # mode — without the single-partition exchange that would bottleneck
-    # the fact-sized candidate table at cluster scale.
-    cand, n_total = surrogate_key_with_count(
-        cand_df, "candidate_id", ["cand_mjd", "filename"]
+    # scalable mode produces ids identical to the global-window mode —
+    # without the single-partition exchange that would bottleneck the
+    # fact-sized candidate table at cluster scale.
+    cand = surrogate_key(
+        cand_df, "candidate_id", ["cand_mjd", "filename"], scalable=True
     )
     cand = cand.withColumns(
         {
@@ -107,7 +103,7 @@ def transform_candidate(
             raise UnexpectedShapeError(
                 "Unexpected number of candidates after beam-id as-of join."
             )
-    return joined.drop("cand_beam", "cand_coherent"), n_total
+    return joined.drop("cand_beam", "cand_coherent")
 
 
 def deduplicate_candidates(cand: DataFrame) -> DataFrame:
@@ -137,22 +133,13 @@ def transform_sp_candidate(
     cand: DataFrame,
     remote_file_root_path: str,
     partition_key: str,
-    n_candidates: int,
 ) -> DataFrame:
     """sp_candidate rows: plot path prefixed with the remote root and
     partition (candidate/transform.py:205-227).
 
-    The numbering follows ``candidate_id`` — the dense 1-based key the
-    FIRST scalable pass assigned — so instead of a second full
-    range-partitioning pass (sampling job + range shuffle + fact-sized
-    localCheckpoint pin + sizes collect), the rank is recovered from
-    ``candidate_id``'s known range via :func:`surrogate_key_dense_int`:
-    one hash exchange, one tiny counts collect, nothing pinned
-    (VERDICT r14 #1 — fuse the two key assignments onto one sorted
-    lineage)."""
-    sp = surrogate_key_dense_int(
-        cand, "sp_candidate_id", "candidate_id", key_max=n_candidates
-    )
+    The numbering follows ``candidate_id`` — unique, so a total order —
+    and renumbers the deduplicated candidates densely from 1."""
+    sp = surrogate_key(cand, "sp_candidate_id", ["candidate_id"], scalable=True)
     return sp.withColumn(
         "sp_cand_plot_path",
         F.concat_ws(
@@ -172,7 +159,7 @@ def transform_spccl(
     validate: bool = True,
 ) -> CandidateTables:
     """Candidate transformation entrypoint (candidate/transform.py:230-237)."""
-    cand, n_candidates = transform_candidate(cand_df, beam_obs, validate=validate)
+    cand = transform_candidate(cand_df, beam_obs, validate=validate)
     # deduped candidates feed both output tables; cache post-dedup.
     # filename is consumed by the dedup (processed_at + tie-break) and
     # referenced nowhere below — drop it before the persist so the
@@ -184,9 +171,7 @@ def transform_spccl(
         .drop("filename")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sp = transform_sp_candidate(
-        cand, remote_file_root_path, partition_key, n_candidates
-    )
+    sp = transform_sp_candidate(cand, remote_file_root_path, partition_key)
 
     candidate = cand.select(
         F.col("candidate_id").alias("id"),

@@ -844,7 +844,7 @@ def surrogate_key_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
     covers=("W5",),
-    description="partition-offset surrogate keys (zipWithIndex technique, no global window)",
+    description="bucketed surrogate keys (sampled order-key bounds, no global window)",
 )
 def surrogate_key_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select("o_orderkey")

@@ -2266,8 +2266,8 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-number concentration index completing the Lorenz/decile
     analysis. Every term is an exact BIGINT (cents, ranks over a total
     order); the closed-form Gini needs one division. The global
-    row_number is the local formulation — at scale use the
-    partition-offset ranking `surrogate_key(scalable=True)` provides.
+    row_number is the local formulation — at scale use the bucketed
+    ranking `surrogate_key(scalable=True)` provides.
     """
     o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(

@@ -9,8 +9,9 @@ Spark-first redesign (SURVEY.md §4.3): per-row statements and driver
 dicts cannot scale, so
 
 - surrogate keys are computed deterministically *in Spark* before the
-  sink (operators/dedup.py surrogate_key) — ids never come back from the
-  database;
+  sink (operators/dedup.py surrogate_key, whose ``scalable=True`` mode
+  numbers the novel rows of an incremental load) — ids never come back
+  from the database;
 - idempotency is a MERGE-shaped upsert: anti-join new rows against the
   existing natural keys, append only the novel ones (exactly the
   semantics of ``INSERT ... ON CONFLICT DO NOTHING``);
@@ -312,6 +313,14 @@ def incremental_load(
             df = df.withColumn("__existing_id", F.lit(None).cast("long"))
             offset = 0
 
+        # One lineage cut per table, on the reconciled batch: the
+        # numbering's bounds sample (which materializes it), its count
+        # and row_number branches, the keymap and the write all read it.
+        # Without the cut each of them re-plans the whole upstream
+        # pipeline DAG, and every child table's plan drags it in through
+        # the keymap — after a few tables the combined plan string alone
+        # can OOM the driver.
+        df = df.localCheckpoint(eager=False)
         novel = df.where(F.col("__existing_id").isNull())
         novel = surrogate_key(novel, "__new_id", [pk], offset=offset + 1, scalable=True)
         keymap = (
@@ -321,11 +330,7 @@ def incremental_load(
                 novel.select(F.col(pk).alias("old"), F.col("__new_id").alias("new"))
             )
         )
-        # Keymaps are small but their lineage drags the ENTIRE upstream
-        # pipeline DAG into every child table's plan — after a few tables
-        # the combined plan string alone can OOM the driver. Eagerly
-        # localCheckpoint to truncate lineage at each table boundary.
-        keymaps[name] = keymap.dropDuplicates(["old"]).localCheckpoint(eager=True)
+        keymaps[name] = keymap.dropDuplicates(["old"])
 
         out_cols = [c for c in tables[name].columns]
         novel_final = novel.withColumn(pk, F.col("__new_id")).select(*out_cols)

@@ -163,84 +163,125 @@ def test_surrogate_key_scalable_large(spark):
     assert [r["k"] for r in rows] == sorted(r["k"] for r in rows)
 
 
-def test_surrogate_key_dense_int_matches_scalable(spark):
-    """The dense-int second-pass numbering (round 15: fuses the MeerTRAP
-    sp_candidate pass onto the candidate_id key) must reproduce
-    surrogate_key(scalable=True) ids exactly on a gappy key subset —
-    including keys at bucket boundaries, an empty-bucket key range, and
-    n < num_buckets degenerate splits."""
-    from ska_src_maltopuft_etl_spark.operators import surrogate_key_dense_int
-
-    n = 10_000
-    base = spark.range(1, n + 1).select(F.col("id").alias("cid"))
-    # keep ~1/3 of keys, biased gaps: drop whole ranges plus a modulus
-    kept = base.where(
-        ((F.col("cid") % 3) == 1) & ~F.col("cid").between(2_000, 4_000)
+def _sk_string(spark):
+    df = spark.range(3_000).select(
+        F.sha2(F.col("id").cast("string"), 256).alias("s")
     )
-    got = surrogate_key_dense_int(kept, "sk", "cid", key_max=n)
-    want = surrogate_key(kept, "sk", ["cid"], scalable=True)
-    assert got.orderBy("sk").collect() == want.orderBy("sk").collect()
-    # degenerate: fewer rows than buckets, offset respected
-    tiny = spark.createDataFrame([(7,), (9_999,)], "cid long")
-    rows = (
-        surrogate_key_dense_int(tiny, "sk", "cid", key_max=n, offset=5)
-        .orderBy("sk")
-        .collect()
+    return df, ["s"], 1
+
+
+def _sk_multi_column(spark):
+    df = spark.range(5_000).select(
+        (F.col("id") % 7).alias("a"), (F.col("id") * 13 % 5_000).alias("b")
     )
-    assert [(r["cid"], r["sk"]) for r in rows] == [(7, 5), (9_999, 6)]
+    return df, [F.col("a").desc(), "b"], 1
 
 
-def test_surrogate_key_scalable_storage_level(spark):
-    """storage_level= reaches the localCheckpoint: with DISK_ONLY the
-    materialized fact must occupy zero storage memory, and the ids must
-    be identical to the default path (ADVICE r6 / VERDICT r6 #4)."""
-    from pyspark.storagelevel import StorageLevel
-
-    n = 5_000
-    df = spark.range(n).select((F.col("id") * 37 % n).alias("k"))
-    out = surrogate_key(
-        df, "sk", ["k"], scalable=True, storage_level=StorageLevel.DISK_ONLY
-    )
-    rows = out.orderBy("sk").collect()
-    assert [r["sk"] for r in rows] == list(range(1, n + 1))
-    jsc = spark.sparkContext._jsc  # noqa: SLF001
-    levels = {
-        str(r.getStorageLevel())
-        for r in jsc.getPersistentRDDs().values()
-        if r.getStorageLevel().useDisk() and not r.getStorageLevel().useMemory()
-    }
-    assert levels, "no DISK_ONLY-pinned RDD found for the checkpointed fact"
-    from ska_src_maltopuft_etl_spark.engine import release_all_persisted
-
-    release_all_persisted(spark)
-
-
-def test_surrogate_key_scalable_counter_invariant(spark):
-    """The scalable path validates, per partition, that
-    monotonically_increasing_id's local counter is consecutive from 0
-    (max local id + 1 == count) before emitting any id — the documented
-    mono-id contract alone does not guarantee contiguous numbering
-    (ADVICE r6 medium). With the real implementation the check passes
-    even on skewed/empty partitions."""
-    # heavily skewed: one giant key plus singletons → very uneven
-    # range partitions, some possibly empty
+def _sk_skewed(spark):
+    # one giant key plus singletons: very uneven buckets, some empty
     df = spark.range(20_000).select(
         F.when(F.col("id") < 15_000, F.lit(0)).otherwise(F.col("id")).alias("k"),
         F.col("id").alias("tie"),
     )
-    out = surrogate_key(df, "sk", ["k", "tie"], scalable=True)
-    assert out.count() == 20_000
-    agg = out.agg(
-        F.min("sk").alias("lo"), F.max("sk").alias("hi"),
-        F.countDistinct("sk").alias("n"),
-    ).first()
-    assert (agg["lo"], agg["hi"], agg["n"]) == (1, 20_000, 20_000)
+    return df, ["k", "tie"], 1
+
+
+def _sk_gappy_int(spark):
+    # ~1/3 of 1..10k kept, with a whole range dropped
+    df = spark.range(1, 10_001).select(F.col("id").alias("cid")).where(
+        ((F.col("cid") % 3) == 1) & ~F.col("cid").between(2_000, 4_000)
+    )
+    return df, ["cid"], 1
+
+
+def _sk_tiny_offset(spark):
+    df = spark.createDataFrame([(7,), (9_999,)], "cid long")
+    return df, ["cid"], 5
+
+
+def _nullable_keys(spark):
+    return spark.range(4_000).select(
+        F.when(F.col("id") % 5 == 0, F.lit(None))
+        .otherwise(F.col("id") % 97)
+        .alias("k"),
+        F.col("id").alias("tie"),
+    )
+
+
+def _sk_nulls_first(spark):
+    # exact_percentiles passes F.col(c).asc(), i.e. nulls first
+    return _nullable_keys(spark), [F.col("k").asc_nulls_first(), "tie"], 0
+
+
+def _sk_nulls_last(spark):
+    return _nullable_keys(spark), [F.col("k").asc_nulls_last(), "tie"], 1
+
+
+def _sk_desc_nulls_first(spark):
+    return _nullable_keys(spark), [F.col("k").desc_nulls_first(), "tie"], 1
+
+
+def _sk_three_flags(spark):
+    # exact_percentiles(by=["l_returnflag"]): a leading key with 3 values
+    df = spark.range(6_000).select(
+        F.element_at(F.array(*map(F.lit, "ANR")), (F.col("id") % 3 + 1).cast("int"))
+        .alias("flag"),
+        (F.col("id") * 7_919 % 6_000).cast("double").alias("v"),
+    )
+    return df, [F.col("flag").asc(), F.col("v").asc()], 0
+
+
+def _sk_empty(spark):
+    return spark.createDataFrame([], "k long, s string"), ["k", "s"], 1
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _sk_string,
+        _sk_multi_column,
+        _sk_skewed,
+        _sk_gappy_int,
+        _sk_tiny_offset,
+        _sk_nulls_first,
+        _sk_nulls_last,
+        _sk_desc_nulls_first,
+        _sk_three_flags,
+        _sk_empty,
+    ],
+    ids=lambda f: f.__name__.removeprefix("_sk_"),
+)
+def test_surrogate_key_scalable_matches_window(spark, case):
+    """The bucketed scalable numbering assigns exactly the ids of the
+    single-partition window (the oracle) on every total order."""
+    df, order, offset = case(spark)
+    want = surrogate_key(df, "sk", order, offset=offset)
+    got = surrogate_key(df, "sk", order, offset=offset, scalable=True)
+    assert got.orderBy("sk").collect() == want.orderBy("sk").collect()
+
+
+def test_surrogate_key_bounds_split_within_leading_key(spark):
+    """Bounds are whole order-key tuples, so a leading key with 3
+    values still splits into more than 3 non-empty buckets."""
+    from ska_src_maltopuft_etl_spark.operators.dedup import (
+        _bucket,
+        _order_cols,
+        _sample_bounds,
+        _sort_spec,
+    )
+
+    df, order, _ = _sk_three_flags(spark)
+    specs = [_sort_spec(c) for c in _order_cols(order)]
+    bounds = _sample_bounds(df, specs, 8)
+    buckets = df.select(_bucket(specs, bounds).alias("b")).distinct().count()
+    assert buckets > 3
 
 
 def test_surrogate_key_scalable_plan_no_global_window(spark):
-    """The fact table must flow through range partitioning, not a
-    single-partition global window; the only SinglePartition exchange
-    allowed is the tiny per-partition-count prefix sum (VERDICT r2 #2)."""
+    """The fact never crosses a single-partition exchange and nothing
+    is pinned: the plan scans no checkpointed RDD, its only
+    SinglePartition exchange sits above the per-bucket count aggregate,
+    and building it runs at most the one bounds-sample job."""
     import contextlib
     import io
 
@@ -250,37 +291,25 @@ def test_surrogate_key_scalable_plan_no_global_window(spark):
     def plan(d):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            d.explain("formatted")
+            d.explain()
         return buf.getvalue()
 
-    dense_plan = plan(surrogate_key(df, "sk", ["k"]))
-    scal_plan = plan(surrogate_key(df, "sk", ["k"], scalable=True))
+    sc = spark.sparkContext
+    sc.setJobGroup("surrogate_key_build", "scalable numbering build")
+    try:
+        scalable = surrogate_key(df, "sk", ["k"], scalable=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("surrogate_key_build")) <= 1
+
     # dense mode is the single-partition shape (what the pipeline must avoid)
-    assert "SinglePartition" in dense_plan
-    # scalable mode materializes the range-partitioned sort via
-    # localCheckpoint (lineage cut), so the downstream plan reads the
-    # checkpointed RDD rather than showing the range exchange.
-    assert "ExistingRDD" in scal_plan
-    # ... and the fact-side numbering is monotonically_increasing_id
-    # arithmetic, NOT a row_number window (which would force one more
-    # full hash-exchange + sort of the fact on __pid). The only Window
-    # in the plan is the prefix sum over the per-partition counts —
-    # n_partitions rows, after an aggregation.
-    fact_windows = [
-        ln
-        for ln in scal_plan.splitlines()
-        if ") Window" in ln or ln.strip().startswith("Window")
-    ]
-    assert len(fact_windows) <= 1, scal_plan
-    # scalable mode: fact rows are range-partitioned; at most one
-    # SinglePartition exchange remains and it sits above the HashAggregate
-    # that reduced the data to one row per partition.
-    single = [
-        ln for ln in scal_plan.splitlines() if "SinglePartition" in ln
-    ]
-    assert len(single) <= 1
-    if single:
-        assert "hashagg" in scal_plan.lower()
+    assert "SinglePartition" in plan(surrogate_key(df, "sk", ["k"]))
+    lines = plan(scalable).splitlines()
+    assert not any("ExistingRDD" in ln for ln in lines), "\n".join(lines)
+    single = [i for i, ln in enumerate(lines) if "SinglePartition" in ln]
+    assert len(single) == 1, "\n".join(lines)
+    # the operator directly under that exchange is the count aggregate
+    assert "HashAggregate" in lines[single[0] + 1], "\n".join(lines)
 
 
 def test_validated_join(spark):

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from ska_src_maltopuft_etl_spark.operators import (
     asof_join_backward,
@@ -411,3 +412,21 @@ def test_interval_overlap_join_matches_python_model(spark, lints, rints, width):
         if k1 == k2 and s1 <= s2 + d2 and s2 <= s1 + d1
     )
     assert got == want
+
+
+def test_scalable_surrogate_key_repeatable_without_pin(spark):
+    """Nothing pins the numbered frame, so every action recomputes it
+    from a freshly round-robin-partitioned input; the ids must depend
+    neither on which rows land in which partition nor on the sampled
+    bucket bounds."""
+    n = 20_000
+    df = spark.range(n).select(
+        (F.col("id") % 13).alias("g"), (F.col("id") * 7_919 % n).alias("k")
+    )
+    sk = surrogate_key(df.repartition(7), "sk", ["g", "k"], scalable=True)
+    first = {(r["g"], r["k"]): r["sk"] for r in sk.collect()}
+    second = {(r["g"], r["k"]): r["sk"] for r in sk.collect()}
+    assert first == second
+    assert sorted(first.values()) == list(range(1, n + 1))
+    again = surrogate_key(df.repartition(7), "sk", ["g", "k"], scalable=True)
+    assert {(r["g"], r["k"]): r["sk"] for r in again.collect()} == first

@@ -58,7 +58,8 @@ def run_once(spark, df, name: str) -> dict:
     wall = round(time.time() - t0, 3)
     rec = {
         "wall_sec": wall,
-        "rows_in": (q.lastProgress or {}).get("numInputRows"),
+        # every micro-batch, not just the last one availableNow ran
+        "rows_in": sum(p.get("numInputRows", 0) for p in q.recentProgress),
         "state": state_metrics(q),
     }
     shutil.rmtree(ckpt, ignore_errors=True)
