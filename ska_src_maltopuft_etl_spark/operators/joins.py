@@ -1,33 +1,12 @@
-"""Join operators Spark lacks as primitives, built scale-first.
+"""Join operators Spark lacks as primitives (as-of, interval, validated, key remap).
 
-Reference semantics reproduced (SURVEY.md §2.4):
-
-- J5 interval (range) join — reference implements it as a per-row Python
-  loop over the parent frame, O(n·m)
-  (meertrap/observation/transform.py:203-221,316-321).
-- J6 backward as-of join with by-keys — reference uses Polars
-  ``join_asof`` (meertrap/candidate/transform.py:107-136).
-- J9/F17 key remap with identity fallback — reference uses a driver-side
-  dict + per-row ``map_elements`` (core/database_loader.py:182-188).
-- J1-J4 cardinality-validated equi-joins — Polars ``validate="1:m"`` etc.
-  (meertrap/observation/transform.py:38-104).
-
-Scale notes:
-
-- ``asof_join_backward`` uses the union + last(ignoreNulls) window
-  technique: ONE shuffle on the by-keys, no range-join row explosion, no
-  broadcast requirement. It scales to arbitrarily large both-sides as long
-  as a single (by-key) group's rows fit in an executor's sort spill —
-  which Spark handles by external sort. This beats the range-join +
-  row_number formulation, whose intermediate blowup is O(matches).
-- ``interval_join`` is an equi+range join: with by-keys it is a plain
-  shuffled equi-join with a residual range filter; without by-keys the
-  small side should be broadcast (the caller passes ``broadcast_right``).
+Interval-point joins (J5): use :func:`interval_join` in general, and
+:func:`interval_join_asof` when no right interval nests inside another.
 """
 
 from __future__ import annotations
 
-from typing import Literal, Sequence
+from typing import Iterable, Literal, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -35,6 +14,12 @@ from pyspark.sql import functions as F
 
 class CardinalityError(ValueError):
     """Join cardinality validation failed (mirrors Polars ``validate=``)."""
+
+
+def _check_no_clash(left: DataFrame, out_rcols: Iterable[str]) -> None:
+    clash = set(out_rcols) & set(left.columns)
+    if clash:
+        raise ValueError(f"right columns clash with left: {sorted(clash)}; pass right_prefix")
 
 
 # ---------------------------------------------------------------------------
@@ -92,9 +77,7 @@ def asof_join(
     lcols = left.columns
     rcols = [c for c in right.columns if c not in by]
     out_rcols = {c: f"{right_prefix}{c}" for c in rcols}
-    if set(out_rcols.values()) & set(lcols):
-        clash = set(out_rcols.values()) & set(lcols)
-        raise ValueError(f"right columns clash with left: {sorted(clash)}; pass right_prefix")
+    _check_no_clash(left, out_rcols.values())
 
     # marker: right=0 sorts before left=1 at equal times → exact matches
     # visible to left rows. With allow_exact_matches=False, invert.
@@ -184,19 +167,6 @@ def asof_join(
     return out.select(*sel)
 
 
-def asof_join_backward(*args, **kwargs) -> DataFrame:
-    """Alias for :func:`asof_join` with ``direction="backward"`` (the
-    reference's semantics, meertrap candidate/transform.py:129-160)."""
-    kwargs["direction"] = "backward"
-    return asof_join(*args, **kwargs)
-
-
-def asof_join_forward(*args, **kwargs) -> DataFrame:
-    """Alias for :func:`asof_join` with ``direction="forward"``."""
-    kwargs["direction"] = "forward"
-    return asof_join(*args, **kwargs)
-
-
 # ---------------------------------------------------------------------------
 # Interval join (J5)
 # ---------------------------------------------------------------------------
@@ -231,6 +201,8 @@ def interval_join(
     """
     by = list(by)
     rcols = [c for c in right.columns if c not in by]
+    out_rcols = [f"{right_prefix}{c}" for c in rcols]
+    _check_no_clash(left, out_rcols)
     renamed = right
     for c in rcols:
         renamed = renamed.withColumnRenamed(c, f"{right_prefix}{c}") if right_prefix else renamed
@@ -261,419 +233,7 @@ def interval_join(
             .where(F.col("__rn") == 1)
             .drop("__rn")
         )
-    out_rcols = [f"{right_prefix}{c}" for c in rcols]
     return joined.select(*out_cols, *out_rcols)
-
-
-def interval_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    right_start: str,
-    right_end: str,
-    bucket_width_s: int = 86400,
-    by: Sequence[str] = (),
-    how: Literal["inner", "left"] = "left",
-    tie_break: str | None = None,
-    tie_break_desc: bool = False,
-    right_prefix: str = "",
-    force_pairwise: bool = False,
-) -> DataFrame:
-    """:func:`interval_join` for the case neither side is broadcastable.
-
-    Decision matrix (the J5 family):
-
-    - ALL matches wanted (``tie_break=None``) → this operator. The
-      pair blowup IS the answer size; nothing can beat it.
-    - ONE best match + arbitrary (nested) intervals → delegated to
-      :func:`interval_join_sweep` (this operator does that
-      automatically when ``tie_break`` is set — see below).
-    - ONE best match + non-nested intervals → :func:`interval_join_asof`
-      is cheapest (one window, no explode).
-    - dimension-sized right side → plain :func:`interval_join` with
-      ``broadcast_right=True``.
-
-    ``tie_break`` guard (round-11 VERDICT "What's wrong" #1): calling
-    THIS variant with a ``tie_break`` buys the full per-(key, bucket)
-    pair materialization only to throw away all but one row per probe —
-    the measured ×10-zipf cliff is 15.3 s here vs 1.6 s for the sweep.
-    Since the sweep is semantically identical (and strictly more
-    deterministic on ties), a ``tie_break`` call now warns and
-    delegates to :func:`interval_join_sweep`. Pass
-    ``force_pairwise=True`` to keep the pair-join plan anyway (the
-    skew-bench baseline exhibit does, to keep measuring the cliff).
-
-    The plain operator's no-``by``-keys path plans as a
-    BroadcastNestedLoopJoin — correct, but only viable while the
-    interval side broadcasts; with ``by`` keys it shuffles on those
-    keys alone, which degenerates when a key is hot (one user's whole
-    history in one task). This variant makes the TIME axis part of the
-    shuffle key: timestamps map to ``floor(epoch / width)`` buckets,
-    each interval explodes to the buckets it covers, and the join is a
-    plain equi-join on (by..., bucket) with the containment predicate
-    as a residual. A left row has exactly ONE bucket, so it meets each
-    containing interval exactly once — no post-join dedup.
-
-    Cost model: the explode replicates each interval ``span/width + 1``
-    times — pick ``bucket_width_s`` near the typical interval span so
-    the factor is ~2. Both sides then shuffle uniformly (hot keys
-    spread across their time buckets), which is the 100 TB shape: at
-    that size the time axis, not the key axis, carries the
-    cardinality. Tie-break semantics match :func:`interval_join`.
-    """
-    if tie_break is not None and not force_pairwise:
-        import warnings
-
-        warnings.warn(
-            "interval_join_bucketed(tie_break=...) materializes every "
-            "(probe, interval) pair before keeping one — delegating to "
-            "interval_join_sweep, the pair-free single-best-match "
-            "operator (pass force_pairwise=True to override)",
-            stacklevel=2,
-        )
-        return interval_join_sweep(
-            left,
-            right,
-            left_ts=left_ts,
-            right_start=right_start,
-            right_end=right_end,
-            tie_break=tie_break,
-            bucket_width_s=bucket_width_s,
-            by=by,
-            how=how,
-            tie_break_desc=tie_break_desc,
-            right_prefix=right_prefix,
-        )
-    by = list(by)
-    rcols = [c for c in right.columns if c not in by]
-    renamed = right
-    if right_prefix:
-        for c in rcols:
-            renamed = renamed.withColumnRenamed(c, f"{right_prefix}{c}")
-    rstart = f"{right_prefix}{right_start}"
-    rend = f"{right_prefix}{right_end}"
-    width_us = int(bucket_width_s) * 1_000_000
-
-    out_cols = list(left.columns)
-    left = left.withColumn("__iv_rowid", F.monotonically_increasing_id())
-    lb = left.withColumn(
-        "__iv_bucket", F.floor(F.unix_micros(F.col(left_ts)) / F.lit(width_us))
-    )
-    rb = renamed.withColumn(
-        "__iv_bucket",
-        F.explode(
-            F.sequence(
-                F.floor(F.unix_micros(F.col(rstart)) / F.lit(width_us)),
-                F.floor(F.unix_micros(F.col(rend)) / F.lit(width_us)),
-            )
-        ),
-    )
-    cond = (
-        (lb["__iv_bucket"] == rb["__iv_bucket"])
-        & (rb[rstart] <= lb[left_ts])
-        & (rb[rend] >= lb[left_ts])
-    )
-    for k in by:
-        cond = cond & (lb[k] == rb[k])
-    joined = lb.join(rb, cond, how)
-    joined = joined.drop(rb["__iv_bucket"]).drop(lb["__iv_bucket"])
-    for k in by:
-        joined = joined.drop(rb[k])
-
-    if tie_break is not None:
-        tb = f"{right_prefix}{tie_break}"
-        order = (
-            F.col(tb).desc_nulls_last()
-            if tie_break_desc
-            else F.col(tb).asc_nulls_last()
-        )
-        w = Window.partitionBy(F.col("__iv_rowid")).orderBy(order)
-        joined = (
-            joined.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    out_rcols = [f"{right_prefix}{c}" for c in rcols]
-    return joined.select(*out_cols, *out_rcols)
-
-
-
-def interval_join_sweep(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    right_start: str,
-    right_end: str,
-    tie_break: str,
-    bucket_width_s: int = 86400,
-    by: Sequence[str] = (),
-    how: Literal["inner", "left"] = "left",
-    tie_break_desc: bool = True,
-    right_prefix: str = "",
-) -> DataFrame:
-    """Skew-safe single-best-match interval join for ARBITRARY (nested /
-    overlapping) right intervals: an ordered merge-scan per
-    (by-keys, time-bucket) instead of a pair-producing join.
-
-    Semantics match :func:`interval_join`/``interval_join_bucketed``
-    with a ``tie_break``: each left row gets the right interval
-    containing ``left_ts`` that wins the tie-break ordering (ties on
-    the tie-break value are broken deterministically by greatest
-    ``right_start``, then greatest ``right_end`` — the pair-join
-    formulations leave such ties to row_number nondeterminism).
-
-    Why it exists (round-10/11 Zipf finding, VERDICT r10 "What's wrong"
-    #1): every pair-producing formulation — including the bucketed one —
-    pairs each probe with EVERY candidate interval of its (key, bucket)
-    before the tie-break dedups, an 8.7-12× intermediate blowup on
-    Zipf-hot keys (20.8 s vs the as-of twin's 1.1 s at the ×10-zipf
-    tier), and the as-of reduction (:func:`interval_join_asof`) is only
-    exact for NON-NESTED intervals. This operator closes the gap:
-
-    1. Intervals explode to the time buckets they cover (sort epoch =
-       ``max(start, bucket_start)``, so a copy is active from its
-       bucket's first instant); probes carry their single bucket.
-    2. One hash shuffle on (by..., bucket) + sortWithinPartitions by
-       (group, time, marker) — intervals sort before probes at equal
-       times, so ``start <= ts`` is inclusive.
-    3. A linear Arrow-batched sweep (``mapInPandas``) walks each sorted
-       group once, holding candidate intervals in a max-heap keyed by
-       the tie-break. Probes ascend in time, so a heap top whose
-       ``end < ts`` is dead FOREVER and is lazily popped; the surviving
-       top is exactly the best containing interval. Each interval is
-       pushed/popped at most once per bucket copy: O((n+m)·log m) per
-       group, ZERO pair materialization, and the group key contains the
-       time axis, so a Zipf-hot user's history spreads across its
-       buckets instead of one task.
-
-    The sweep is genuinely not expressible in DataFrame ops (dynamic
-    ordered state with deletions); per the repo's UDF policy it is an
-    Arrow-batched ``mapInPandas`` — the only Python loop is over rows
-    already sorted and partitioned JVM-side. For ALL-matches semantics
-    (no tie-break) the output IS the pair set — use
-    ``interval_join_bucketed``, whose blowup is then the answer size.
-    """
-    by = list(by)
-    if tie_break is None:  # defensive: signature requires it
-        raise ValueError("interval_join_sweep picks ONE best match; pass tie_break")
-    rcols = [c for c in right.columns if c not in by]
-    renamed = right
-    if right_prefix:
-        for c in rcols:
-            renamed = renamed.withColumnRenamed(c, f"{right_prefix}{c}")
-    out_rcols = [f"{right_prefix}{c}" for c in rcols]
-    rstart = f"{right_prefix}{right_start}"
-    rend = f"{right_prefix}{right_end}"
-    rtb = f"{right_prefix}{tie_break}"
-    width_us = int(bucket_width_s) * 1_000_000
-
-    lcols = list(left.columns)
-    if set(out_rcols) & set(lcols):
-        clash = set(out_rcols) & set(lcols)
-        raise ValueError(
-            f"right columns clash with left: {sorted(clash)}; pass right_prefix"
-        )
-    K = [f"__sw_k{i}" for i in range(len(by))]
-    rfields = {f.name: f for f in renamed.schema.fields}
-    lfields = {f.name: f for f in left.schema.fields}
-
-    # Probes whose join key or timestamp is NULL can never match — route
-    # them around the shuffle entirely (left-join semantics keep them).
-    probe_ok = F.col(left_ts).isNotNull()
-    for k in by:
-        probe_ok = probe_ok & F.col(k).isNotNull()
-    probes = left.where(probe_ok).select(
-        *[F.col(b).alias(K[i]) for i, b in enumerate(by)],
-        F.floor(F.unix_micros(F.col(left_ts)) / F.lit(width_us))
-        .cast("long")
-        .alias("__sw_b"),
-        F.unix_micros(F.col(left_ts)).alias("__sw_t"),
-        F.lit(1).alias("__sw_m"),
-        F.lit(None).cast("long").alias("__sw_s"),
-        F.lit(None).cast("long").alias("__sw_e"),
-        *[F.col(c) for c in lcols],
-        *[F.lit(None).cast(rfields[c].dataType).alias(c) for c in out_rcols],
-    )
-    ival_ok = F.col(rstart).isNotNull() & F.col(rend).isNotNull()
-    for k in by:
-        ival_ok = ival_ok & F.col(k).isNotNull()
-    ivals = (
-        renamed.where(ival_ok)
-        .select(
-            *[F.col(b).alias(K[i]) for i, b in enumerate(by)],
-            F.explode(
-                F.sequence(
-                    F.floor(F.unix_micros(F.col(rstart)) / F.lit(width_us)),
-                    F.floor(F.unix_micros(F.col(rend)) / F.lit(width_us)),
-                )
-            ).alias("__sw_b"),
-            F.unix_micros(F.col(rstart)).alias("__sw_s"),
-            F.unix_micros(F.col(rend)).alias("__sw_e"),
-            *[F.col(c) for c in out_rcols],
-        )
-        .select(
-            *K,
-            "__sw_b",
-            F.greatest(F.col("__sw_s"), F.col("__sw_b") * F.lit(width_us)).alias(
-                "__sw_t"
-            ),
-            F.lit(0).alias("__sw_m"),
-            "__sw_s",
-            "__sw_e",
-            *[F.lit(None).cast(lfields[c].dataType).alias(c) for c in lcols],
-            *[F.col(c) for c in out_rcols],
-        )
-    )
-    unioned = ivals.unionByName(probes)
-    part_cols = [F.col(c) for c in (*K, "__sw_b")]
-    stream = unioned.repartition(*part_cols).sortWithinPartitions(
-        *K, "__sw_b", "__sw_t", "__sw_m", "__sw_s", "__sw_e"
-    )
-
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(
-        [StructField(c, lfields[c].dataType, True) for c in lcols]
-        + [StructField(c, rfields[c].dataType, True) for c in out_rcols]
-    )
-    n_l, n_r = len(lcols), len(out_rcols)
-    tb_idx = out_rcols.index(rtb)
-    inner = how == "inner"
-    desc = tie_break_desc
-
-    class _Rev:
-        """Inverts comparison so heapq (a min-heap) pops the MAX.
-
-        ``__eq__`` is required, not optional: tuple comparison consults
-        it before ``__lt__``, and the default identity-``__eq__`` made
-        equal tie-break values look UNEQUAL, so heap ordering
-        short-circuited at the _Rev element and never fell through to
-        the -start/-end tie policy (round-12 interval fuzzer finding:
-        desc-ordered equal-tb intervals picked an arbitrary winner
-        instead of the documented greatest-start one; asc ordering uses
-        the raw value and was always correct).
-        """
-
-        __slots__ = ("v",)
-
-        def __init__(self, v):
-            self.v = v
-
-        def __lt__(self, other):
-            return other.v < self.v
-
-        def __eq__(self, other):
-            # Load-bearing invariant: ordkeys only ever compare
-            # _Rev-to-_Rev — the null_tb flag ahead of this element in
-            # the heap tuple partitions NULL from non-NULL tie-breaks,
-            # so tuple comparison never reaches a _Rev with a non-_Rev
-            # on the other side. The isinstance guard keeps any future
-            # caller outside that invariant on Python's defined
-            # NotImplemented path instead of an AttributeError.
-            if not isinstance(other, _Rev):
-                return NotImplemented
-            return self.v == other.v
-
-    def sweep(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        group = None
-        # (null_flag, ordkey, -start, -end, seq, end, payload): seq is an
-        # insertion counter so fully-tied entries never fall through to
-        # comparing payload tuples (which may hold None vs value and
-        # would raise); among full (tb, start, end) ties the
-        # first-encountered interval wins, deterministically per plan.
-        heap: list = []
-        seq = 0
-        none_r = (None,) * n_r
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            keys = [pdf[c].to_numpy() for c in (*K, "__sw_b")]
-            # Per-row work is the whole cost of this pass (guide §4.2), so
-            # everything O(row × column) happens at C speed per batch:
-            # .tolist() converts cells to Python objects once, zip
-            # materializes the row tuples once (a per-row generator
-            # expression re-pays iterator setup per cell), and the group
-            # boundaries come from one vectorized compare per key column
-            # instead of building + comparing a key tuple per row. List
-            # indexing in the loop beats numpy scalar indexing (which
-            # boxes a fresh numpy scalar per access).
-            #
-            # Rows are split by marker BEFORE tuple materialization
-            # (ADVICE r14): an interval row only consumes its right-side
-            # payload and a probe row only its left columns, so building
-            # both tuple sets for every row threw away half the zip work
-            # — interval-heavy batches (the bucket-copy amplification)
-            # built left-row tuples that were never read. kind_pos maps
-            # a stream index to its row's position within its own kind.
-            ts = pdf["__sw_t"].tolist()
-            m_np = pdf["__sw_m"].to_numpy() == 0
-            ipdf = pdf[m_np]
-            ppdf = pdf[~m_np]
-            marks = m_np.tolist()  # True = interval copy, False = probe
-            kind_pos = np.where(
-                m_np, np.cumsum(m_np) - 1, np.cumsum(~m_np) - 1
-            ).tolist()
-            s_us = ipdf["__sw_s"].tolist()
-            e_us = ipdf["__sw_e"].tolist()
-            lrows = list(zip(*[ppdf[c].tolist() for c in lcols]))
-            rrows = list(zip(*[ipdf[c].tolist() for c in out_rcols]))
-            bnd = np.zeros(n, dtype=bool)
-            for k in keys:
-                np.logical_or(bnd[1:], k[1:] != k[:-1], out=bnd[1:])
-            # First row continues the previous batch's group unless its
-            # key differs (NaN/NaT keys compare unequal to themselves in
-            # both formulations, so they open a new group either way).
-            bnd[0] = group is None or tuple(k[0] for k in keys) != group
-            group = tuple(k[n - 1] for k in keys)
-            newgrp = bnd.tolist()
-            out: list[tuple] = []
-            out_append = out.append
-            heappush, heappop = heapq.heappush, heapq.heappop
-            for i in range(n):
-                if newgrp[i]:
-                    heap.clear()
-                t = ts[i]
-                p = kind_pos[i]
-                if marks[i]:  # interval copy: push candidate
-                    payload = rrows[p]
-                    tb = payload[tb_idx]
-                    null_tb = tb is None or tb != tb  # None/NaN/NaT lose
-                    # null tie-breaks get a CONSTANT ordkey (0): they sort
-                    # behind every non-null (null_flag=1 first element) and
-                    # among themselves by -start; a raw None/NaT ordkey
-                    # would raise on comparison.
-                    ordkey = 0 if null_tb else (_Rev(tb) if desc else tb)
-                    seq += 1
-                    e = int(e_us[p])
-                    heappush(
-                        heap,
-                        (null_tb, ordkey, -int(s_us[p]), -e, seq, e, payload),
-                    )
-                    continue
-                # probe: lazily evict heap tops dead at this (ascending) ts
-                while heap and heap[0][5] < t:
-                    heappop(heap)
-                if heap:
-                    out_append(lrows[p] + heap[0][6])
-                elif not inner:
-                    out_append(lrows[p] + none_r)
-            if out:
-                yield pd.DataFrame(out, columns=[*lcols, *out_rcols])
-
-    matched = stream.mapInPandas(sweep, schema=out_schema)
-    if how == "left":
-        leftovers = left.where(~F.coalesce(probe_ok, F.lit(False))).select(
-            *[F.col(c) for c in lcols],
-            *[F.lit(None).cast(rfields[c].dataType).alias(c) for c in out_rcols],
-        )
-        matched = matched.unionByName(leftovers)
-    return matched
 
 
 def interval_join_asof(
@@ -699,15 +259,17 @@ def interval_join_asof(
     probe either contains it or nothing does, so picking it first and
     filtering containment after is exact.
 
-    Why it exists (round-10 Zipf-skew finding, SCALING.md): both other
-    formulations pair every probe with every candidate interval of the
-    same key before the tie-break dedups — on a Zipf-keyed ×10 tier the
-    hottest user alone produces tens of millions of intermediate pairs
-    and an 8.7× cliff. The as-of plan is one union + one window: the
-    hot key costs one sorted partition (O(n log n) rows, zero pair
-    blowup), the same shape the certified as-of family already scales
-    with.
+    Why it exists (round-10 Zipf-skew finding, SCALING.md):
+    :func:`interval_join` pairs every probe with every candidate interval
+    of the same key before the tie-break dedups — on a Zipf-keyed ×10
+    tier the hottest user alone produces tens of millions of
+    intermediate pairs and an 8.7× cliff. The as-of plan is one union +
+    one window: the hot key costs one sorted partition (O(n log n) rows,
+    zero pair blowup), the same shape the certified as-of family already
+    scales with.
     """
+    rcols = [c for c in right.columns if c not in by]
+    _check_no_clash(left, [f"{right_prefix}{c}" for c in rcols])
     p = right_prefix or "__iva_"
     matched = asof_join(
         left,
@@ -719,7 +281,6 @@ def interval_join_asof(
         right_tiebreak=[right_end],
         direction="backward",
     )
-    rcols = [c for c in right.columns if c not in by]
     contains = F.col(f"{p}{right_end}") >= F.col(left_ts)
     if how == "inner":
         out = matched.where(contains)
@@ -767,8 +328,7 @@ def interval_overlap_join(
     no window. Cost: each side is replicated span/width + 1 times —
     pick ``bucket_width_s`` near the typical span. Output size is the
     true overlap count (inherent); for Zipf-hot keys the time axis in
-    the shuffle key spreads the work exactly as in
-    ``interval_join_bucketed``.
+    the shuffle key spreads a hot key's work across its buckets.
     """
     by = list(by)
     rcols = [c for c in right.columns if c not in by]
@@ -777,11 +337,7 @@ def interval_overlap_join(
         for c in rcols:
             renamed = renamed.withColumnRenamed(c, f"{right_prefix}{c}")
     out_rcols = [f"{right_prefix}{c}" for c in rcols]
-    if set(out_rcols) & set(left.columns):
-        clash = set(out_rcols) & set(left.columns)
-        raise ValueError(
-            f"right columns clash with left: {sorted(clash)}; pass right_prefix"
-        )
+    _check_no_clash(left, out_rcols)
     rstart = f"{right_prefix}{right_start}"
     rend = f"{right_prefix}{right_end}"
     width_us = int(bucket_width_s) * 1_000_000

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ska_src_maltopuft_etl_spark.operators import (
     CardinalityError,
-    asof_join_backward,
+    asof_join,
     dedup_keep_first,
     interval_join,
     remap_keys,
@@ -48,8 +48,9 @@ def test_asof_backward_basic(spark, obs):
         ],
         "beam int, coherent boolean, observed_at timestamp, name string",
     )
-    out = asof_join_backward(
-        cand, obs, "observed_at", "t_min", by=["beam", "coherent"]
+    out = asof_join(
+        cand, obs, "observed_at", "t_min", by=["beam", "coherent"],
+        direction="backward",
     )
     got = {r["name"]: r["beam_id"] for r in out.collect()}
     assert got == {"a": 101, "b": 102, "c": None, "d": 201, "e": 301}
@@ -61,9 +62,9 @@ def test_asof_backward_no_exact(spark, obs):
         [(1, True, ts("2023-11-20 22:00:00"), "b")],
         "beam int, coherent boolean, observed_at timestamp, name string",
     )
-    out = asof_join_backward(
+    out = asof_join(
         cand, obs, "observed_at", "t_min", by=["beam", "coherent"],
-        allow_exact_matches=False,
+        allow_exact_matches=False, direction="backward",
     )
     assert out.first()["beam_id"] == 101
 
@@ -105,9 +106,9 @@ def test_asof_tolerance(spark, obs):
         [(1, True, ts("2023-11-20 21:30:00"), "a")],
         "beam int, coherent boolean, observed_at timestamp, name string",
     )
-    out = asof_join_backward(
+    out = asof_join(
         cand, obs, "observed_at", "t_min", by=["beam", "coherent"],
-        tolerance_seconds=60,
+        tolerance_seconds=60, direction="backward",
     )
     assert out.first()["beam_id"] is None  # 30 min > 60 s tolerance
 
@@ -346,6 +347,43 @@ def test_interval_join_duplicate_left_rows(spark):
     assert all(r["sb_id"] == 1 for r in rows)
 
 
+@pytest.mark.parametrize(
+    "op", ["asof_join", "interval_join", "interval_join_asof", "interval_overlap_join"]
+)
+def test_joins_reject_right_column_clash(spark, op):
+    """A right column named like a left column must raise the same
+    ValueError from every join here, not come back as a duplicate
+    column or an ambiguous-reference error; a right_prefix resolves it."""
+    from ska_src_maltopuft_etl_spark.operators import joins
+
+    left = spark.createDataFrame(
+        [("u", ts("2024-01-02 00:00:00"), "probe")],
+        "k string, ts timestamp, tag string",
+    )
+    right = spark.createDataFrame(
+        [("u", ts("2024-01-01 00:00:00"), ts("2024-01-03 00:00:00"), "ival")],
+        "k string, s timestamp, e timestamp, tag string",
+    )
+    call = {
+        "asof_join": lambda **kw: joins.asof_join(
+            left, right, "ts", "s", by=["k"], **kw
+        ),
+        "interval_join": lambda **kw: joins.interval_join(
+            left, right, "ts", "s", "e", by=["k"], **kw
+        ),
+        "interval_join_asof": lambda **kw: joins.interval_join_asof(
+            left, right, "ts", "s", "e", by=["k"], **kw
+        ),
+        "interval_overlap_join": lambda **kw: joins.interval_overlap_join(
+            left, right, "ts", "ts", "s", "e", by=["k"], **kw
+        ),
+    }[op]
+    with pytest.raises(ValueError, match=r"\['tag'\]; pass right_prefix"):
+        call()
+    out = call(right_prefix="r_")
+    assert [(r["tag"], r["r_tag"]) for r in out.collect()] == [("probe", "ival")]
+
+
 def test_topk_per_group_matches_plain_window(spark):
     import random
 
@@ -407,115 +445,6 @@ def test_incremental_agg_matches_full_recompute(spark):
             else:
                 assert got[g][k] == want[g][k]
     assert got["c"]["n_rows"] == 2 and got["c"]["value_mean"] == 0.0
-
-
-def test_interval_join_bucketed_matches_plain(spark):
-    """The bucketized formulation must produce exactly the plain
-    interval_join result (same fixture as interval_join_sessions),
-    and its plan must be an equi-join — no BroadcastNestedLoop."""
-    import contextlib
-    import io
-
-    from ska_src_maltopuft_etl_spark.operators.joins import (
-        interval_join,
-        interval_join_bucketed,
-    )
-    from ska_src_maltopuft_etl_spark.sources import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    sessions = ev.where(F.col("event_type") == "signup").select(
-        "user_id",
-        F.col("ts").alias("session_start"),
-        (F.col("ts") + F.expr("INTERVAL 3 DAY")).alias("session_end"),
-    )
-    kwargs = dict(
-        left_ts="ts",
-        right_start="session_start",
-        right_end="session_end",
-        by=["user_id"],
-        how="left",
-        tie_break="session_start",
-        tie_break_desc=True,
-    )
-    plain = interval_join(clicks, sessions, broadcast_right=False, **kwargs)
-    bucketed = interval_join_bucketed(
-        clicks, sessions, bucket_width_s=86400, force_pairwise=True, **kwargs
-    )
-    key = lambda r: (r["event_id"], r["session_start"])  # noqa: E731
-    assert sorted(map(key, plain.collect())) == sorted(
-        map(key, bucketed.collect())
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        bucketed.explain("formatted")
-    assert "BroadcastNestedLoopJoin" not in buf.getvalue()
-
-
-def test_interval_join_bucketed_tie_break_delegates_to_sweep(spark):
-    """The tie_break foot-gun guard (round-11 VERDICT #1): a bucketed
-    call with a tie_break warns and routes to interval_join_sweep —
-    same rows, but the plan is the sweep's (ZERO join nodes, one
-    MapInPandas) instead of the pair-materializing equi-join."""
-    import contextlib
-    import io
-    import warnings
-
-    from ska_src_maltopuft_etl_spark.operators.joins import (
-        interval_join_bucketed,
-    )
-    from ska_src_maltopuft_etl_spark.sources import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    sessions = (
-        ev.where(F.col("event_type") == "signup")
-        .select(
-            "user_id",
-            F.col("ts").alias("session_start"),
-            (F.col("ts") + F.expr("INTERVAL 3 DAY")).alias("session_end"),
-        )
-        # Unique (user_id, session_start) by construction: the pairwise
-        # path's row_number tie among equal-session_start intervals is
-        # nondeterministic by design, so equal-start sessions with
-        # different session_end would make the equivalence assertion
-        # below flaky. Here session_end is a function of session_start,
-        # so dropDuplicates is content-deterministic.
-        .dropDuplicates(["user_id", "session_start"])
-    )
-    kwargs = dict(
-        left_ts="ts",
-        right_start="session_start",
-        right_end="session_end",
-        bucket_width_s=86400,
-        by=["user_id"],
-        how="left",
-        tie_break="session_start",
-        tie_break_desc=True,
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        delegated = interval_join_bucketed(clicks, sessions, **kwargs)
-    assert any("interval_join_sweep" in str(w.message) for w in caught)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        pairwise = interval_join_bucketed(
-            clicks, sessions, force_pairwise=True, **kwargs
-        )
-    key = lambda r: (r["event_id"], r["session_start"])  # noqa: E731
-    assert sorted(map(key, delegated.collect())) == sorted(
-        map(key, pairwise.collect())
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        delegated.explain("formatted")
-    plan = buf.getvalue()
-    assert "MapInPandas" in plan
-    assert "Join" not in plan.replace("MapInPandas", "")
 
 
 def test_interval_union_sweep_line_matches_python_model(spark):

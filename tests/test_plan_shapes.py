@@ -144,20 +144,6 @@ def _exchanges(plan: str) -> int:
     )
 
 
-def test_sweep_join_one_shuffle_no_pair_join(spark):
-    plan = plan_of(spark, "interval_join_sweep_sessions")
-    # the whole point of the sweep: NO join node materializes
-    # probe x candidate pairs — one hash shuffle on (key, bucket),
-    # one sort, one linear Arrow pass
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin",
-                 "CartesianProduct"):
-        assert node not in plan, node
-    assert "MapInPandas" in plan
-    assert _exchanges(plan) == 1, plan
-    # null-key probes are routed AROUND the shuffle (union after)
-    assert "Union" in plan
-
-
 def test_overlap_join_single_equi_join_no_dedup(spark):
     plan = plan_of(spark, "interval_overlap_pairs")
     # dedup-free first-common-bucket: ONE equi join, no distinct /

@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ska_src_maltopuft_etl_spark.operators import (
-    asof_join_backward,
+    asof_join,
     dedup_keep_first,
     surrogate_key,
 )
@@ -48,8 +48,9 @@ def test_asof_matches_pandas_merge_asof(spark, left, right):
     else:
         rdf = spark.createDataFrame([], "rid long, k long, rt long")
 
-    out = asof_join_backward(
-        ldf, rdf, left_on="t", right_on="rt", by=["k"], right_tiebreak=["rid"]
+    out = asof_join(
+        ldf, rdf, left_on="t", right_on="rt", by=["k"], right_tiebreak=["rid"],
+        direction="backward",
     )
     got = {r["lid"]: r["rid"] for r in out.collect()}
 
@@ -118,19 +119,19 @@ def test_interval_join_matches_pandas_filter(spark, left, right):
     else:
         rdf = spark.createDataFrame([], "rid long, k long, start long, end long")
 
-    out = interval_join(
-        ldf, rdf, left_ts="t", right_start="start", right_end="end",
-        by=["k"], how="left", tie_break="rid", broadcast_right=False,
-    )
-    got = {r["lid"]: r["rid"] for r in out.collect()}
-
     exp = {}
     for lrow in lpdf.itertuples():
         matches = rpdf[
             (rpdf.k == lrow.k) & (rpdf.start <= lrow.t) & (rpdf.end >= lrow.t)
         ] if len(rpdf) else rpdf
         exp[lrow.lid] = None if len(matches) == 0 else int(matches.sort_values("rid").iloc[0]["rid"])
-    assert got == exp
+    for broadcast_right in (False, True):
+        out = interval_join(
+            ldf, rdf, left_ts="t", right_start="start", right_end="end",
+            by=["k"], how="left", tie_break="rid", broadcast_right=broadcast_right,
+        )
+        got = {r["lid"]: r["rid"] for r in out.collect()}
+        assert got == exp, broadcast_right
 
 
 @settings(
@@ -140,8 +141,6 @@ def test_interval_join_matches_pandas_filter(spark, left, right):
 )
 @given(left=rows, right=rows)
 def test_asof_forward_matches_pandas_merge_asof(spark, left, right):
-    from ska_src_maltopuft_etl_spark.operators import asof_join_forward
-
     lpdf = pd.DataFrame(left, columns=["k", "t"]).reset_index(names="lid")
     rpdf = pd.DataFrame(right, columns=["k", "t"]).reset_index(names="rid")
     # unique winner per (k, t) so both implementations agree (ours picks
@@ -158,8 +157,9 @@ def test_asof_forward_matches_pandas_merge_asof(spark, left, right):
     else:
         rdf = spark.createDataFrame([], "rid long, k long, rt long")
 
-    out = asof_join_forward(
-        ldf, rdf, left_on="t", right_on="rt", by=["k"], right_tiebreak=["rid"]
+    out = asof_join(
+        ldf, rdf, left_on="t", right_on="rt", by=["k"], right_tiebreak=["rid"],
+        direction="forward",
     )
     got = {r["lid"]: r["rid"] for r in out.collect()}
 
@@ -181,6 +181,7 @@ def test_asof_forward_matches_pandas_merge_asof(spark, left, right):
     assert got == want
 
 
+@pytest.mark.parametrize("broadcast_right", [True, False])
 @settings(
     max_examples=10,
     deadline=None,
@@ -194,13 +195,14 @@ def test_asof_forward_matches_pandas_merge_asof(spark, left, right):
         min_size=0, max_size=15,
     ),
 )
-def test_interval_join_bucketed_matches_python_model(spark, points, intervals):
-    """Bucketized interval join vs a brute-force python model on random
-    epoch-second points/intervals: same matches for every bucket width,
-    including widths much smaller and larger than the interval spans."""
+def test_interval_join_all_matches_python_model(spark, broadcast_right, points, intervals):
+    """All-matches interval join (no tie-break) vs a brute-force python
+    model on random epoch-second points/intervals, nested and
+    overlapping intervals included, with and without a broadcast
+    interval side."""
     import datetime as dt
 
-    from ska_src_maltopuft_etl_spark.operators.joins import interval_join_bucketed
+    from ska_src_maltopuft_etl_spark.operators.joins import interval_join
 
     if not points:
         return
@@ -224,9 +226,9 @@ def test_interval_join_bucketed_matches_python_model(spark, points, intervals):
             [], "rid long, k long, s timestamp, e timestamp"
         )
 
-    out = interval_join_bucketed(
+    out = interval_join(
         ldf, rdf, left_ts="ts", right_start="s", right_end="e",
-        bucket_width_s=60, by=["k"], how="inner",
+        by=["k"], how="inner", broadcast_right=broadcast_right,
     )
     got = sorted((r["lid"], r["rid"]) for r in out.collect())
     want = sorted(
@@ -238,90 +240,16 @@ def test_interval_join_bucketed_matches_python_model(spark, points, intervals):
     assert got == want
 
 
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    points=st.lists(st.tuples(st.integers(0, 3), st.integers(0, 500)),
-                    min_size=1, max_size=20),
-    intervals=st.lists(
-        st.tuples(st.integers(0, 3), st.integers(0, 500), st.integers(0, 200)),
-        min_size=0, max_size=15,
-    ),
-    width=st.sampled_from([7, 60, 1000]),
-)
-def test_interval_join_sweep_matches_python_model(spark, points, intervals, width):
-    """Merge-scan interval join vs a brute-force python model on random
-    points/intervals — random durations make NESTED and overlapping
-    intervals common, the case the as-of reduction cannot express.
-    Checks the full tie-break contract: best containing interval by
-    (tie_break=start DESC, then greatest start, then greatest end), and
-    left-join null emission for unmatched probes — at bucket widths
-    smaller than, near, and larger than the interval spans."""
-    import datetime as dt
-
-    from ska_src_maltopuft_etl_spark.operators.joins import interval_join_sweep
-
-    base = dt.datetime(2024, 1, 1)
-    lrows = [
-        (i, k, base + dt.timedelta(seconds=t))
-        for i, (k, t) in enumerate(points)
-    ]
-    rrows = [
-        (j, k, base + dt.timedelta(seconds=s),
-         base + dt.timedelta(seconds=s + d))
-        for j, (k, s, d) in enumerate(intervals)
-    ]
-    ldf = spark.createDataFrame(lrows, "lid long, k long, ts timestamp")
-    rdf = spark.createDataFrame(
-        rrows or [], "rid long, k long, s timestamp, e timestamp"
-    )
-
-    out = interval_join_sweep(
-        ldf, rdf, left_ts="ts", right_start="s", right_end="e",
-        tie_break="s", bucket_width_s=width, by=["k"], how="left",
-        tie_break_desc=True, right_prefix="r_",
-    )
-    got = sorted((r["lid"], r["r_rid"]) for r in out.collect())
-
-    def best(i, k, t):
-        cands = [
-            (s, s + d, j)
-            for j, (k2, s, d) in enumerate(intervals)
-            if k == k2 and s <= t <= s + d
-        ]
-        if not cands:
-            return None
-        # max start, then max end; rid never decides (starts+ends tie →
-        # operator keeps the first encountered, but (s,e)-identical
-        # intervals are indistinguishable up to rid, so pin rid only via
-        # (s,e) uniqueness in expectations below)
-        s, e, j = max(cands, key=lambda c: (c[0], c[1], -c[2]))
-        return j
-
-    want = sorted((i, best(i, k, t)) for i, (k, t) in enumerate(points))
-    # where (s,e) fully tie, either rid is admissible: compare on (s,e)
-    def canon(pairs):
-        return [
-            (i, None if j is None else (intervals[j][1], intervals[j][1] + intervals[j][2]))
-            for i, j in pairs
-        ]
-
-    assert canon(got) == canon(want)
-
-
-def test_interval_join_sweep_nested_boundaries(spark):
+def test_interval_join_nested_boundaries(spark):
     """Deterministic nested-interval fixture: the as-of reduction gives
     the WRONG answer here (latest-started interval has already ended),
-    the sweep must give the right one; plus inclusive-boundary probes
-    at t == start and t == end."""
+    interval_join with a latest-start tie-break must give the right one;
+    plus inclusive-boundary probes at t == start and t == end."""
     import datetime as dt
 
     from ska_src_maltopuft_etl_spark.operators.joins import (
+        interval_join,
         interval_join_asof,
-        interval_join_sweep,
     )
 
     base = dt.datetime(2024, 1, 1)
@@ -341,9 +269,9 @@ def test_interval_join_sweep_nested_boundaries(spark):
          ("u", d(101))], # after everything: unmatched
         "k string, ts timestamp",
     )
-    out = interval_join_sweep(
-        left, right, "ts", "s", "e", tie_break="s",
-        bucket_width_s=86400 * 7, by=["k"], how="left", right_prefix="r_",
+    out = interval_join(
+        left, right, "ts", "s", "e", by=["k"], how="left",
+        tie_break="s", tie_break_desc=True, right_prefix="r_",
     )
     got = {r["ts"]: r["r_tag"] for r in out.collect()}
     assert got == {d(50): "wide", d(7): "nested", d(1): "wide",

@@ -153,9 +153,7 @@ def main() -> int:
     # --- flagship family under the session default, uniform vs zipf --
     default_battery = (
         "asof_join_forward_next_action",
-        "interval_join_bucketed_sessions",
         "interval_join_asof_sessions",
-        "interval_join_sweep_sessions",
         "interval_overlap_pairs",
         "bloom_pruned_semi_join",
         "salted_join_revenue",
